@@ -32,6 +32,10 @@ object GraphOps {
     * The checkpoint job is |V| rows — far below the |E| shuffle it
     * caps. Fixed `iters` (no convergence probe) keeps the round count
     * — and hence the shuffle count — a static property of the job.
+    * Every round checkpoint (here, in [[kcorePeel]] and in
+    * [[bfsLevels]]) goes through [[QueryCaches.localCheckpoint]], so
+    * [[QueryCaches.releaseAll]] drops its blocks: consume the result
+    * before releasing, as with any ledger-backed frame.
     *
     * Determinism: BOTH unbounded-group double sums (the per-dst
     * contribution sum and the dangling-mass sum) cross their aggregate
@@ -95,7 +99,7 @@ object GraphOps {
       .crossJoin(broadcast(n1))
       .select(col("node"), (lit(1.0) / col("n")).as("rank"), col("n"),
         coalesce(col("has_out"), lit(false)).as("has_out"))
-      .localCheckpoint(true)
+      .transform(QueryCaches.localCheckpoint(_))
     for (_ <- 1 to iters) {
       // hub-safe: per-edge terms cross the sum integer-scaled at 1e14
       // (exact, order-independent long sums; mass-invariant overflow
@@ -119,7 +123,7 @@ object GraphOps {
             (coalesce(col("contrib"), lit(0.0)) + col("dm") / col("n")))
             .as("rank"),
           col("n"), col("has_out"))
-        .localCheckpoint(true)
+        .transform(QueryCaches.localCheckpoint(_))
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -148,13 +152,14 @@ object GraphOps {
       .select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    var e = edges.select(col("a"), col("b")).localCheckpoint(true)
+    var e = edges.select(col("a"), col("b"))
+      .transform(QueryCaches.localCheckpoint(_))
     for (_ <- 1 to rounds) {
       val keep = degrees(e).filter(col("deg") >= k).select("node")
       e = e
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
+        .transform(QueryCaches.localCheckpoint(_))
     }
     degrees(e)
   }
@@ -180,14 +185,14 @@ object GraphOps {
     val e = CacheHandle.persistWith(handle,
       edges.select(col("src"), col("dst")).distinct())
     var dist = sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
+      .withColumn("dist", lit(0L)).transform(QueryCaches.localCheckpoint(_))
     for (_ <- 1 to maxHops) {
       val expanded = e
         .join(dist.select(col("node").as("src"), col("dist")), "src")
         .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
       dist = dist.unionByName(expanded)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+        .transform(QueryCaches.localCheckpoint(_))
     }
     dist
   }

@@ -84,22 +84,18 @@ object JdbcDestination {
       batchSize = batchSize)
   }
 
-  /** Execute a plan through Spark's JDBC writer. */
+  /** Execute a plan through Spark's JDBC writer, counted by the save job. */
   def write(df: DataFrame, url: String, p: Plan,
       props: Map[String, String] = Map.empty): LoadReport = {
-    val cached = df.persist() // count + save: one source scan, not two
-    try {
-      val n = cached.count()
-      val w = cached.write.format("jdbc")
-        .mode(SaveMode.Overwrite)
-        .option("url", url)
-        .option("dbtable", p.table)
-        .option("truncate", p.truncate.toString)
-        .option("createTableColumnTypes", p.columnTypes)
-        .option("batchsize", p.batchSize.toString)
-      props.foreach { case (k, v) => w.option(k, v) }
-      w.save()
-      LoadReport(Some(p.action), p.table, n)
-    } finally cached.unpersist()
+    val n = LoadReport.countWritten(df)(_.write.format("jdbc")
+      .mode(SaveMode.Overwrite)
+      .option("url", url)
+      .option("dbtable", p.table)
+      .option("truncate", p.truncate.toString)
+      .option("createTableColumnTypes", p.columnTypes)
+      .option("batchsize", p.batchSize.toString)
+      .options(props)
+      .save())
+    LoadReport(Some(p.action), p.table, n)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 
 /** `destination_local` (`app/data.py:137-153`): resolve `path` under a
@@ -24,44 +25,40 @@ object LocalDestination {
     else if (path.nonEmpty) Paths.get(baseDir, path)
     else Paths.get(baseDir)
 
-  /** Faithful single-file variant. Returns the reference-format report. */
+  /** Faithful single-file variant. Returns the reference-format report,
+    * counted by the write job; a failed write leaves no temp dir behind.
+    */
   def write(df: DataFrame, tableName: String, path: String,
       baseDir: String): LoadReport = {
     val dir = resolve(baseDir, path)
     Files.createDirectories(dir)
     val target = dir.resolve(s"$tableName.csv")
     val tmp = Files.createTempDirectory(dir, s".$tableName-load")
-    // persist: the count and the write must not scan the source twice
-    val cached = df.persist()
     try {
-      val n = cached.count()
-      cached.coalesce(1).write.mode("overwrite")
+      val n = LoadReport.countWritten(df)(_.coalesce(1).write.mode("overwrite")
         .option("header", "true")
         // Python csv.writer emits empty cells bare, not quoted ""
-        .option("emptyValue", "").csv(tmp.toString)
+        .option("emptyValue", "").csv(tmp.toString))
       val part = withList(tmp)(_.find(_.getFileName.toString.startsWith("part-")))
         .getOrElse(throw new IllegalStateException("no part file written"))
       Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      withList(tmp)(_.foreach(Files.deleteIfExists(_)))
-      Files.deleteIfExists(tmp)
       LoadReport(None, target.toString, n)
-    } finally cached.unpersist()
+    } finally FileUtils.deleteQuietly(tmp.toFile)
   }
 
   /** Scale variant: parallel multi-part CSV directory per table. */
   def writeDir(df: DataFrame, tableName: String, path: String,
       baseDir: String, compress: Boolean = false): LoadReport = {
     val dir = resolve(baseDir, path).resolve(tableName)
-    val cached = df.persist()
-    try {
-      val w = cached.write.mode("overwrite").option("header", "true")
+    val n = LoadReport.countWritten(df) { d =>
+      val w = d.write.mode("overwrite").option("header", "true")
       (if (compress) w.option("compression", "gzip") else w).csv(dir.toString)
-      LoadReport(None, dir.toString, cached.count())
-    } finally cached.unpersist()
+    }
+    LoadReport(None, dir.toString, n)
   }
 
   /** `Files.list` holds an open DirectoryStream — always close it. */
-  private def withList[A](p: Path)(f: Iterator[Path] => A): A = {
+  private[sync] def withList[A](p: Path)(f: Iterator[Path] => A): A = {
     val s = Files.list(p)
     try f(s.iterator().asScala) finally s.close()
   }

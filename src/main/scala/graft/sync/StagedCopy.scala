@@ -1,8 +1,6 @@
 package graft.sync
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 
@@ -33,25 +31,16 @@ object StagedCopy {
       statements: Seq[String], // execute in order on the warehouse
       nRecords: Long)
 
-  /** Parallel headerless gzip-CSV stage write; returns part files. */
+  /** Parallel headerless gzip-CSV stage write; returns parts and count. */
   private def writeStage(df: DataFrame, dir: Path): (Seq[String], Long) = {
-    val cached = df.persist()
-    try {
-      cached.write.mode("overwrite")
-        .option("header", "false")
-        .option("emptyValue", "") // python csv.writer: bare empty cells
-        .option("compression", "gzip")
-        .csv(dir.toString)
-      val parts = {
-        val s = Files.list(dir)
-        try s.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.startsWith("part-") && n.endsWith(".csv.gz"))
-          .toSeq.sorted
-        finally s.close()
-      }
-      (parts, cached.count())
-    } finally cached.unpersist()
+    val n = LoadReport.countWritten(df)(_.write.mode("overwrite")
+      .option("header", "false")
+      .option("emptyValue", "") // python csv.writer: bare empty cells
+      .option("compression", "gzip")
+      .csv(dir.toString))
+    val parts = LocalDestination.withList(dir)(_.map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") && n.endsWith(".csv.gz")).toSeq.sorted)
+    (parts, n)
   }
 
   /** Redshift: stage under `s3://bucket/prefix/` and COPY the prefix.

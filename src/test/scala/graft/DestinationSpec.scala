@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sync.{DropCreate, JdbcDestination, LocalDestination, Truncate}
@@ -22,6 +24,22 @@ class DestinationSpec extends AnyFunSuite {
     assert(lines.size == 3)
     assert(report.render ==
       s"Created $f.\n2 records loaded successfully.\n")
+  }
+
+  test("a failed write leaves no temp dir and the earlier <table>.csv intact") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-dest-fail")
+    LocalDestination.write(Seq(("1", "a")).toDF("id", "v"), "t", "", base.toString)
+    val target = base.resolve("t.csv")
+    val before = Files.readAllBytes(target)
+    intercept[Exception](
+      LocalDestination.write(TestSpark.failingFrame(), "t", "", base.toString))
+    val left = {
+      val s = Files.list(base)
+      try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close()
+    }
+    assert(!left.exists(_.startsWith(".t-load")), left)
+    assert(java.util.Arrays.equals(Files.readAllBytes(target), before))
   }
 
   test("absolute path overrides base dir (data.py:138-142)") {

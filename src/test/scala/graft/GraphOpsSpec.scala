@@ -16,6 +16,18 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
+  test("pageRank holds no persistent RDD after releaseAll") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+      .toDF("src", "dst")
+    assert(GraphOps.pageRank(edges, iters = 3).collect().length == 4)
+    graft.ops.QueryCaches.releaseAll()
+    val held = sc.getPersistentRDDs.keySet -- rdds0
+    assert(held.isEmpty, s"${held.size} persistent RDDs held after releaseAll")
+  }
+
   test("cycle graph is uniform at every damping") {
     // a→b→c→a: perfectly symmetric, rank must stay exactly 1/3
     val r = ranksOf(Seq("a" -> "b", "b" -> "c", "c" -> "a"))

@@ -1,5 +1,10 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sync.{DropCreate, JdbcDestination, Truncate}
@@ -57,5 +62,35 @@ class JdbcIntegrationSpec extends AnyFunSuite {
     val back3 = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "my_table").load()
     assert(back3.columns.length == 3)
+  }
+
+  test("count is exact on a zero-row frame and a quoted multi-partition frame") {
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType)))
+    val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
+    val rows = (0 until 100).map { i =>
+      Row(i.toString, if (i % 2 == 0) s"""a "q", b $i""" else s"x\ny $i")
+    }
+    val multi =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    Seq("empty_t" -> empty, "multi_t" -> multi).foreach { case (t, df) =>
+      val p = JdbcDestination.plan(t, df.columns.toSeq, Nil, derby)
+        .copy(table = t)
+      val r = JdbcDestination.write(df, url, p)
+      val back = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", t).load()
+      assert(r.nRecords == df.count(), t)
+      assert(back.count() == r.nRecords, t)
+      assert(back.collect().toSet == df.collect().toSet, t)
+    }
+  }
+
+  test("a failing save throws within a bound instead of waiting for its count") {
+    val bad = TestSpark.failingFrame()
+    val p = JdbcDestination.plan("bad_t", bad.columns.toSeq, Nil, derby)
+      .copy(table = "bad_t")
+    val thrown = Future(intercept[Exception](JdbcDestination.write(bad, url, p)))(
+      ExecutionContext.global)
+    Await.result(thrown, 60.seconds)
   }
 }
